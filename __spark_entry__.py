@@ -2,7 +2,7 @@
 
 `entry(spark)` — flagship smoke: loads /root/testdata/sf0.001 parquet,
 derives a deterministic transcript view from the `events` table, and runs
-the M1 end-to-end slice (window turn assembly → mapInPandas extraction →
+the M1 end-to-end slice (window turn assembly → regex extraction →
 class histogram; SURVEY.md §7, reference flagship Q2 analog:
 /root/reference/src/dataset_preparation.py:65-87).
 
@@ -1807,7 +1807,7 @@ def _events_as_transcripts_linked(events: DataFrame) -> DataFrame:
 
 
 def kg_pipeline_triples(spark, sf):
-    """Full KG pipeline — window assembly → mapInPandas extraction →
+    """Full KG pipeline — window assembly → regex extraction →
     mention normalization → linking (similarity + sameAs edges) → connected
     components → canonical triples — over the events-derived corpus.
 
@@ -1821,7 +1821,7 @@ def kg_pipeline_triples(spark, sf):
     events = _t(spark, sf, "events")
     turns = assemble_turns(_events_as_transcripts_linked(events)).drop("rn")
     # Three consumers pull the extraction output (CC node collect, edge
-    # collect, final canonical join) — persist so the mapInPandas pass
+    # collect, final canonical join) — persist so the extraction pass
     # runs once, mirroring run_pipeline's parquet stage checkpoint.
     raw = persist_tracked(extract_raw_triples(turns))
     mentions = mentions_from_raw(raw)
@@ -1842,7 +1842,7 @@ def kg_flagship_histogram(spark, sf):
 
     ORACLED: the transcript view maps each event to exactly one
     '<ent> is a <event_type>.' sentence, so the class histogram after
-    window assembly + mapInPandas regex extraction must equal a plain
+    window assembly + regex extraction must equal a plain
     GROUP BY over events — the whole extraction path is SQL-verified."""
     events = _t(spark, sf, "events")
     turns = assemble_turns(_events_as_transcripts(events)).drop("rn")

@@ -78,7 +78,7 @@ def main() -> None:
     )
     timings: dict[str, float] = {}
 
-    # headline: triple-extraction throughput (window assembly + mapInPandas).
+    # headline: triple-extraction throughput (window assembly + extraction).
     # One untimed warm-up pass spawns the python workers, JITs the scan and
     # fills the page cache — the timed run measures steady-state throughput
     # (what a long-running cluster job sees), not process startup.

@@ -2,16 +2,17 @@
 and profiling engine with the capabilities of mariocosenza/kgsum.
 
 Reference semantics (file:line cites into /root/reference/) are re-expressed
-Spark-first: declarative DataFrame plans for every relational operator,
-vectorized pandas/Arrow UDFs for the NLP/extraction surface, explicit
-shuffle partitioning, checkpoint/resume, and per-partition lineage.
+Spark-first: declarative DataFrame plans for every relational operator
+and for rule-based extraction, vectorized pandas/Arrow UDFs for the NLP
+surface, explicit shuffle partitioning, checkpoint/resume, and
+per-partition lineage.
 
 Layout:
   session       SparkSession builders tuned for local[N] and cluster runs
   schemas       explicit StructTypes for every table (no inference)
   synth         deterministic transcript corpus + golden-triple oracle
   assembly      window-ordered turn assembly (row_number over conv_id)
-  extraction    batched OpenIE-style triple + mention extraction (mapInPandas)
+  extraction    OpenIE-style triple + mention extraction (Catalyst expressions)
   linking       token-blocking, similarity candidate joins, hot-key salting
   canonicalize  iterative connected-components (large-star/small-star)
   pipeline      end-to-end staged run with checkpoint markers + lineage

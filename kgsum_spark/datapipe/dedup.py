@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kgsum_spark.datapipe._util import persist_tracked, spread as _spread_impl
+from kgsum_spark.datapipe._util import persist_tracked, spread
 
 # 2^31-1: keeps a·x within int64 (a, x < 2^31 → product < 2^62), so the
 # modular hash runs under ANSI overflow checking without try_multiply.
@@ -36,13 +36,6 @@ BROADCAST_DROP_THRESHOLD = 10_000_000
 
 def normalize_text(c):
     return F.trim(F.regexp_replace(F.lower(c), r"[^a-z0-9]+", " "))
-
-
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Widen under-partitioned inputs before a cardinality-exploding stage
-    (shared implementation: datapipe/_util.py — inputFiles() upper bound,
-    then size-based bin-packing estimate, then the RDD probe)."""
-    return _spread_impl(df, key)
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str,
@@ -127,7 +120,7 @@ def _gram_array(text_col: str, n: int):
 
 def _shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(id, shingle) — distinct word n-grams per document (struct-valued)."""
-    df = _spread(df, id_col)
+    df = spread(df, id_col)
     return df.select(
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(_gram_array(text_col, n))).alias("shingle"),
@@ -576,7 +569,7 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, simhash: bigint) — 64-bit SimHash over words, entirely JVM-side:
     explode tokens, 64 codegen'd bit-sum aggregates, recombine."""
     toks = (
-        _spread(df, id_col)
+        spread(df, id_col)
         .select(F.col(id_col).alias("id"),
                 F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("tok"))
         .filter(F.col("tok") != "")
@@ -722,7 +715,7 @@ def simhash_md5(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     (xxhash64 variant simhash64() remains the cheaper in-engine default).
     Same shape as simhash64: explode tokens, 60 codegen'd bit aggregates."""
     toks = (
-        _spread(df, id_col)
+        spread(df, id_col)
         .select(F.col(id_col).alias("id"),
                 F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("tok"))
         .filter(F.col("tok") != "")

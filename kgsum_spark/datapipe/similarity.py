@@ -16,17 +16,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from kgsum_spark.datapipe._util import persist_tracked, spread as _spread_impl
+from kgsum_spark.datapipe._util import persist_tracked, spread
 
 
 def _to_double(c) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
-
-
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Widen under-partitioned inputs before per-row vector math (shared
-    metadata-only implementation: datapipe/_util.py)."""
-    return _spread_impl(df, key)
 
 
 def dot(a, b) -> Column:
@@ -53,7 +47,7 @@ def cosine_topk(
     q = F.lit(query).cast("array<double>")
     v = _to_double(F.col(vec_col))
     return (
-        _spread(df, id_col)
+        spread(df, id_col)
         .select(F.col(id_col).alias("id"), cosine(v, q).alias("sim"))
         .orderBy(F.col("sim").desc(), F.col("id").asc())
         .limit(k)
@@ -69,7 +63,7 @@ def hyperplane_signatures(
     import numpy as np
 
     planes = np.random.RandomState(seed).normal(size=(n_planes, dim))
-    df = _spread(df, id_col)
+    df = spread(df, id_col)
     v = _to_double(F.col(vec_col))
     bucket = F.lit(0).cast("long")
     for i, p in enumerate(planes):
@@ -198,14 +192,14 @@ def multi_lsh_candidates(
             })
             yield out
 
-    # _spread (r6): a small/single-file corpus scans as 1-2 partitions;
+    # spread (r6): a small/single-file corpus scans as 1-2 partitions;
     # without widening, the signature matmul AND everything downstream
     # that inherits this partitioning (the bucket self-join's stream
     # side, the verify) would run on 1-2 cores — the deferred-dedup
     # verify pipeline is map-side all the way, so THIS partitioning is
     # the query's parallelism.
     sigs = persist_tracked(
-        _spread(df.select(id_col, vec_col), id_col)
+        spread(df.select(id_col, vec_col), id_col)
         .mapInPandas(gen, "id long, table int, bucket long")
     )  # self-join reads it twice
     a = sigs.select(F.col("id").alias("a"), "table", "bucket")

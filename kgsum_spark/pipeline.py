@@ -5,7 +5,7 @@ per-partition lineage, and wall time; a stage whose marker exists is read
 back instead of recomputed — the reference's skip-if-exists resume pattern,
 /root/reference/src/dataset_preparation.py:532-534):
 
-  1. raw_triples  — scan → window turn assembly → mapInPandas extraction
+  1. raw_triples  — scan → window turn assembly → Catalyst-expression extraction
   2. entities     — mentions → blocking/similarity/sameAs edges → CC → map
   3. triples      — canonicalize subj/obj (broadcast map) → pred-partitioned
                     graph table (the Iceberg-table analog; parquet in this

@@ -113,7 +113,8 @@ def canonical_id(norm: str) -> str:
 def extract_sentence(sentence: str):
     """Reference-oracle extraction for ONE sentence (pure Python, used by
     the single-process oracle and unit tests — the Spark path is the
-    vectorized pandas implementation in extraction.py).
+    Catalyst-expression plan in extraction.py, which runs these same
+    patterns translated to Java regex).
 
     Returns (rule, subj_surface, obj_surface) or None.
     """

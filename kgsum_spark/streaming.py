@@ -8,8 +8,8 @@ checkpointed micro-batches give us for free: each micro-batch is a
 resumable shard with recorded offsets.
 
 Two modes:
-- `streaming_extraction`: stateless stream → mapInPandas extraction →
-  append sink. No window needed (extraction is per-turn); ordering-
+- `streaming_extraction`: stateless stream → Catalyst-expression
+  extraction → append sink. No window needed (extraction is per-turn); ordering-
   dependent work stays in batch.
 - `streaming_extraction_foreach_batch`: per-micro-batch full stage-1
   (window turn-assembly included — windows are legal on the batch df

@@ -2,11 +2,14 @@
 
 from __future__ import annotations
 
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kgsum_spark.assembly import assemble_turns
 from kgsum_spark.extraction import extract_raw_triples, mentions_from_raw
 from kgsum_spark.rules import (
+    RULES,
     block_key_of,
     extract_sentence,
     normalize_mention,
@@ -100,39 +103,39 @@ def test_empty_dataframe_extraction(spark):
     assert extract_raw_triples(df).count() == 0
 
 
-def test_jvm_fastpath_dispatch_parity_with_oracle(spark):
-    """r6: extract_raw_triples routes JVM-portable rows through a pure
-    Catalyst-expression plan and everything else through the mapInPandas
-    path. The UNION of both branches must equal the single-process
-    oracle on a mix that exercises the dispatch — including \\r (the one
-    ASCII char where Java `.` and Python `.` disagree, so it MUST take
-    the Python branch) and the Arrow-fallback hostiles."""
-    from kgsum_spark.extraction import _JVM_NON_PORTABLE_RE
-    from kgsum_spark.rules import extract_sentence, split_sentences
-    import re as _re
+_HOSTILE_TEXTS = [
+    None, "", "A is a b.", "A is a b. C was created by D.",
+    "A was created by B same as http://u.",
+    "CR\rX is a b.",                  # \r inside subject: Python `.` matches it
+    "A is a b.\rC is a d.",           # \r as split whitespace
+    "Ünïcode is a tëst.",
+    'E titled "".',                    # empty quoted object
+    "tab\tis a b.\n\nH has subject k.",
+    "J uses vocabulary http://v.org/v. K has identifier id9.",
+    "x is a b is a c.",               # lazy backtracking
+    "no anchor sentence here.", "trailing. ",
+    "F\x0corm feed is a b.",
+]
 
-    texts = [
-        None, "", "A is a b.", "A is a b. C was created by D.",
-        "A was created by B same as http://u.",
-        "CR\rX is a b.",                  # \r inside subject → Python path
-        "A is a b.\rC is a d.",           # \r as split whitespace
-        "Ünïcode is a tëst.",             # unicode → Python path
-        'E titled "".',                    # empty quoted object (JVM path)
-        "tab\tis a b.\n\nH has subject k.",
-        "J uses vocabulary http://v.org/v. K has identifier id9.",
-        "x is a b is a c.",               # lazy backtracking
-        "no anchor sentence here.", "trailing. ",
-        "F\x0corm feed is a b.",          # \f stays on the JVM path
-    ]
-    # the dispatch predicate itself must send \r/unicode to Python
-    assert _re.search(_JVM_NON_PORTABLE_RE, "CR\rX") is not None
-    assert _re.search(_JVM_NON_PORTABLE_RE, "F\x0corm") is None
-    rows = [(f"c{i}", i, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    got = sorted(
-        (r["subj"], r["pred"], r["obj"], r["obj_is_iri"], r["obj_is_mention"],
-         r["conv_id"], r["turn_idx"])
-        for r in extract_raw_triples(df).collect())
+_HOSTILE_TEXTS_2 = [
+    None, "", "   ", "A is a b.", "A is a b. C was created by D.",
+    "A was created by B same as http://u.",     # two-rule overlap
+    "x is a b is a c.",                         # lazy backtracking
+    "Ünïcode is a tëst.",
+    "NB\xa0SP is a b.",                         # NBSP
+    "V\x0bT is a b.",                           # vertical tab
+    "A is a b.\x1cC is a d.",                   # \x1c: Python whitespace
+    "S\x00entinel is a b.",                     # NUL byte
+    'E titled "".',
+    "tab\tis a b.\n\nH has subject k.",
+    "multi.  space. I has theme t.",
+    "no anchor sentence here.",
+    "J uses vocabulary http://v.org/v. K has identifier id9.",
+    "trailing. ",
+]
+
+
+def _oracle_rows(texts):
     exp = []
     for i, t in enumerate(texts):
         for s in split_sentences(t or ""):
@@ -141,56 +144,83 @@ def test_jvm_fastpath_dispatch_parity_with_oracle(spark):
                 rule, subj, obj = r
                 exp.append((subj, rule.pred, obj, rule.obj_kind == "I",
                             rule.obj_kind == "M", f"c{i}", i))
-    assert got == sorted(exp)
+    return sorted(exp)
+
+
+def _spark_rows(spark, texts):
+    # one input partition: a job over a tiny list is mostly per-task cost
+    rows = spark.sparkContext.parallelize(
+        [(f"c{i}", i, t) for i, t in enumerate(texts)], 1)
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
+    return sorted(
+        (r["subj"], r["pred"], r["obj"], r["obj_is_iri"], r["obj_is_mention"],
+         r["conv_id"], r["turn_idx"])
+        for r in extract_raw_triples(df).collect())
+
+
+def test_extraction_parity_with_oracle_on_hostile_texts(spark):
+    """The translated Java patterns must match what Python `re` matches,
+    including \\r (Java's `.` excludes it without UNIX_LINES) and the
+    Unicode separators where Java's and Python's `\\s` differ."""
+    got = _spark_rows(spark, _HOSTILE_TEXTS)
+    assert got == _oracle_rows(_HOSTILE_TEXTS)
     assert len(got) > 0
 
 
-def test_arrow_fastpath_parity_with_python_oracle():
-    """r6: the extraction UDF runs an Arrow/RE2 fast path for rows whose
-    characters are 'portable' (printable ASCII + tab/newline/FF/CR) and
-    routes everything else to the original pandas/Python-`re` path. Both
-    paths must agree byte-for-byte with the single-process oracle
-    (rules.extract_sentence over rules.split_sentences), including on
-    rows that force the fallback: unicode, NBSP, vertical tab, \\x1c
-    (Python treats it as whitespace, RE2 does not), and the \\x00 split
-    sentinel itself."""
-    import pandas as pd
+def test_translated_classes_agree_with_python_on_every_code_point(spark):
+    """`_java`'s `\\S` and `.` exclude exactly what Python's `\\S` and `.`
+    exclude, over all code points but the surrogates."""
+    import re
 
-    from kgsum_spark.extraction import _OUT_COLS, _extract_batches
-    from kgsum_spark.rules import extract_sentence, split_sentences
+    from kgsum_spark.extraction import _java
 
-    texts = [
-        None, "", "   ", "A is a b.", "A is a b. C was created by D.",
-        "A was created by B same as http://u.",     # two-rule overlap
-        "x is a b is a c.",                         # lazy backtracking
-        "Ünïcode is a tëst.",                       # unicode → fallback
-        "NB SP is a b.",                       # NBSP → fallback
-        "V\x0bT is a b.",                           # \x0b → fallback
-        "A is a b.\x1cC is a d.",                   # \x1c whitespace → fallback
-        "S\x00entinel is a b.",                     # \x00 byte → fallback
-        'E titled "".',                             # empty quoted object
-        "tab\tis a b.\n\nH has subject k.",
-        "multi.  space. I has theme t.",
-        "no anchor sentence here.",
-        "J uses vocabulary http://v.org/v. K has identifier id9.",
-        "trailing. ",
-    ]
-    pdf = pd.DataFrame({
-        "conv_id": [f"c{i}" for i in range(len(texts))],
-        "turn_idx": list(range(len(texts))),
-        "text": texts,
-    })
-    pdf["part_id"] = 7
-    got = list(_extract_batches(iter([pdf])))
-    got = (pd.concat(got, ignore_index=True) if got
-           else pd.DataFrame(columns=_OUT_COLS))
-    exp = []
-    for i, t in enumerate(texts):
-        for s in split_sentences(t or ""):
-            r = extract_sentence(s)
-            if r:
-                rule, subj, obj = r
-                exp.append((subj, rule.pred, obj, rule.obj_kind == "I",
-                            rule.obj_kind == "M", f"c{i}", i, 7))
-    got_rows = sorted(map(tuple, got[_OUT_COLS].itertuples(index=False, name=None)))
-    assert got_rows == sorted(exp)
+    text = "".join(chr(c) for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF)
+    row = spark.createDataFrame([(text,)], "t string").select(
+        F.regexp_replace("t", _java(r"\S"), "").alias("ws"),
+        F.regexp_replace("t", _java("."), "").alias("dot")).first()
+    assert row["ws"] == "".join(re.findall(r"\s", text))
+    assert row["dot"] == "\n"
+
+
+# Differential fuzz: rule templates whose slots and separators splice in
+# characters from the whole code-point range, weighted toward the ones
+# where Java and Python regex classes differ by default.
+_SPECIAL = st.sampled_from([
+    "\r", "\r\n", "\n", "\t", "\x0b", "\x0c", "\x1c", "\x1d", "\x1e", "\x1f",
+    "\x85", "\xa0", "\u1680", "\u2000", "\u200a", "\u2028", "\u2029",
+    "\u202f", "\u205f", "\u3000", "\x00", "\u200b", "\ufeff", "\U0001f600",
+    " ", "  ", ".", "a", "b-1", "Zorblax", "http://u.org/x", '"',
+])
+_ANY = st.text(st.characters(min_codepoint=0, max_codepoint=0x10FFFF,
+                             exclude_categories=("Cs",)), max_size=3)
+_FRAG = st.lists(st.one_of(_SPECIAL, _ANY), min_size=1, max_size=3).map("".join)
+_SENT = st.builds(lambda r, s, o: r.template.format(s=s, o=o),
+                  st.sampled_from(RULES), _FRAG, _FRAG)
+_TEXT = st.lists(st.one_of(_SENT, _FRAG), max_size=6).map("".join)
+
+
+# Each example costs one Spark job (about 1 s, mostly plan building and
+# job overhead), so examples are few but wide.
+@settings(max_examples=20, deadline=None)
+@given(texts=st.lists(st.one_of(st.none(), _TEXT), min_size=1, max_size=24))
+@example(texts=_HOSTILE_TEXTS)
+@example(texts=_HOSTILE_TEXTS_2)
+def test_extraction_differential_vs_oracle(spark, texts):
+    assert _spark_rows(spark, texts) == _oracle_rows(texts)
+
+
+def test_extraction_plan_is_one_scan_without_python(spark, tmp_path):
+    """One Catalyst plan for every row: a single scan of the source, no
+    Python stage and no branch union."""
+    import re
+
+    path = str(tmp_path / "turns")
+    spark.createDataFrame(
+        [(f"c{i}", i, t) for i, t in enumerate(_HOSTILE_TEXTS)],
+        "conv_id string, turn_idx int, text string").write.parquet(path)
+    raw = extract_raw_triples(spark.read.parquet(path))
+    raw.collect()
+    plan = raw._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bFileScan\b", plan)) == 1, plan
+    assert not re.search(r"MapInPandas|PythonUDF|ArrowEvalPython|BatchEvalPython"
+                         r"|\bUnion\b", plan), plan
